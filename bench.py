@@ -776,10 +776,12 @@ def _run_bench() -> int:
     # parallelism signal — task-time/wall does. Sum of per-executor
     # totalDuration from the AppStatusStore (listener-bus maintained;
     # task-end events land before the job returns, so a
-    # delta around the timed window attributes cleanly).
+    # delta around the timed window attributes cleanly). A failed
+    # read is None, never 0: a 0 after a good first read would record
+    # a negative task time.
     _status_store = spark.sparkContext._jsc.sc().statusStore()
 
-    def _task_time_ms() -> int:
+    def _task_time_ms() -> int | None:
         try:
             execs = _status_store.executorList(False)
             return int(
@@ -789,7 +791,7 @@ def _run_bench() -> int:
                 )
             )
         except Exception:
-            return 0
+            return None
 
     task_time: dict[str, float] = {}
 
@@ -817,7 +819,7 @@ def _run_bench() -> int:
                     "overwrite"
                 ).save()
                 dt = time.time() - t0
-                run_task_ms = _task_time_ms() - tt0
+                tt1 = _task_time_ms()
                 if _is_streaming(name):
                     # progress events are delivered on the listener
                     # bus asynchronously AFTER the query stops — poll
@@ -830,7 +832,10 @@ def _run_bench() -> int:
                         time.sleep(0.05)
                 if best is None or dt < best:
                     best = dt
-                    task_time[name] = round(run_task_ms / 1000.0, 3)
+                    if tt0 is None or tt1 is None:
+                        task_time.pop(name, None)
+                    else:
+                        task_time[name] = round((tt1 - tt0) / 1000.0, 3)
                     best_batches = [
                         e["batch_duration_ms"]
                         for e in listener.snapshot()[n_seen:]

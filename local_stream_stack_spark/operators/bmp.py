@@ -30,6 +30,8 @@ from __future__ import annotations
 
 import struct
 
+from local_stream_stack_spark.operators.qoi import rgba_stats
+
 _FILE_HDR = struct.Struct("<2sIHHI")   # magic, file size, res, res, data offset
 _INFO_HDR = struct.Struct("<IiiHHIIiiII")  # BITMAPINFOHEADER
 
@@ -207,27 +209,13 @@ def decode_bmp(data: bytes) -> dict:
 
 
 def decode_image_bmp(data: bytes) -> dict:
-    """Decode + channel statistics, the mapInPandas feature row."""
+    """Decode + RGBA channel statistics (``rgba_stats``), the
+    mapInPandas feature row."""
     img = decode_bmp(data)
-    rs = gs = bs = 0
-    rmin, rmax = 255, 0
-    n = 0
-    for row in img["pixels"]:
-        for r, g, b in row:
-            rs += r
-            gs += g
-            bs += b
-            rmin = r if r < rmin else rmin
-            rmax = r if r > rmax else rmax
-            n += 1
+    px = bytes(v for row in img["pixels"] for rgb in row for v in (*rgb, 255))
     return {
         "width": img["width"],
         "height": img["height"],
         "bpp": img["bpp"],
-        "n_px": n,
-        "r_sum": rs,
-        "g_sum": gs,
-        "b_sum": bs,
-        "r_min": rmin if n else None,
-        "r_max": rmax if n else None,
+        **rgba_stats(px),
     }

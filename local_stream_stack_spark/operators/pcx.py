@@ -19,6 +19,8 @@ from __future__ import annotations
 
 import struct
 
+from local_stream_stack_spark.operators.qoi import rgba_stats
+
 
 def _header(
     width: int, height: int, bits: int, planes: int, bpl: int
@@ -153,16 +155,4 @@ def decode_pcx(data: bytes) -> dict:
                 b = line[2 * bpl + x]
             o = (y * width + x) * 4
             px[o], px[o + 1], px[o + 2], px[o + 3] = r, g, b, 255
-    rs, gs, bs, as_ = px[0::4], px[1::4], px[2::4], px[3::4]
-    return {
-        "width": width,
-        "height": height,
-        "n_px": n,
-        "pixels": bytes(px),
-        "r_sum": sum(rs),
-        "g_sum": sum(gs),
-        "b_sum": sum(bs),
-        "a_sum": sum(as_),
-        "r_min": min(rs) if n else 0,
-        "r_max": max(rs) if n else 0,
-    }
+    return {"width": width, "height": height, **rgba_stats(px)}

@@ -10,6 +10,8 @@ integer-deterministic for the SQL oracle.
 
 from __future__ import annotations
 
+from local_stream_stack_spark.operators.qoi import rgba_stats
+
 
 def encode_pnm(
     kind: str, width: int, height: int, samples: list[int],
@@ -60,7 +62,7 @@ def _scale(v: int, maxval: int) -> int:
 
 def decode_pnm(data: bytes) -> dict:
     """Decode any P1–P6 stream to {kind, width, height, maxval, n_px,
-    pixels (RGBA 8-bit), r_sum, g_sum, b_sum, r_min, r_max}."""
+    pixels (RGBA 8-bit), r_sum, g_sum, b_sum, a_sum, r_min, r_max}."""
     if len(data) < 2 or data[0:1] != b"P" or data[1:2] not in b"123456":
         raise ValueError("not a PNM stream")
     kind = data[:2].decode("ascii")
@@ -156,17 +158,10 @@ def decode_pnm(data: bytes) -> dict:
             b = _scale(vals[3 * i + 2], maxval)
         o = i * 4
         px[o], px[o + 1], px[o + 2], px[o + 3] = r, gg, b, 255
-    rs, gs, bs = px[0::4], px[1::4], px[2::4]
     return {
         "kind": kind,
         "width": width,
         "height": height,
         "maxval": maxval,
-        "n_px": n,
-        "pixels": bytes(px),
-        "r_sum": sum(rs),
-        "g_sum": sum(gs),
-        "b_sum": sum(bs),
-        "r_min": min(rs) if n else 0,
-        "r_max": max(rs) if n else 0,
+        **rgba_stats(px),
     }

@@ -47,6 +47,24 @@ _OP_RGB = 0xFE
 _OP_RGBA = 0xFF
 
 
+def rgba_stats(px: bytes | bytearray) -> dict:
+    """Channel statistics of row-major RGBA bytes: {pixels, n_px,
+    r_sum, g_sum, b_sum, a_sum, r_min, r_max}, with r_min/r_max 0 when
+    empty. The shared feature tail of the decoders that normalize to
+    RGBA (qoi, tga, pcx, pnm, bmp)."""
+    rs = px[0::4]
+    return {
+        "pixels": bytes(px),
+        "n_px": len(rs),
+        "r_sum": sum(rs),
+        "g_sum": sum(px[1::4]),
+        "b_sum": sum(px[2::4]),
+        "a_sum": sum(px[3::4]),
+        "r_min": min(rs, default=0),
+        "r_max": max(rs, default=0),
+    }
+
+
 def _hash(r: int, g: int, b: int, a: int) -> int:
     return (r * 3 + g * 5 + b * 7 + a * 11) % 64
 
@@ -189,20 +207,9 @@ def decode_qoi(data: bytes) -> dict:
         p += 1
     if i != body_end:
         raise ValueError("trailing bytes after QOI body")
-    rs = px[0::4]
-    gs = px[1::4]
-    bs = px[2::4]
-    as_ = px[3::4]
     return {
         "width": width,
         "height": height,
         "channels": channels,
-        "pixels": bytes(px),
-        "n_px": n,
-        "r_sum": sum(rs),
-        "g_sum": sum(gs),
-        "b_sum": sum(bs),
-        "a_sum": sum(as_),
-        "r_min": min(rs) if n else 0,
-        "r_max": max(rs) if n else 0,
+        **rgba_stats(px),
     }

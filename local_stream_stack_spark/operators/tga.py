@@ -20,6 +20,8 @@ from __future__ import annotations
 
 import struct
 
+from local_stream_stack_spark.operators.qoi import rgba_stats
+
 _RLE_MAX = 128
 
 
@@ -179,16 +181,4 @@ def decode_tga(data: bytes) -> dict:
             r, g, b, a = flat[src * width + x]
             o = (row * width + x) * 4
             px[o], px[o + 1], px[o + 2], px[o + 3] = r, g, b, a
-    rs, gs, bs, as_ = px[0::4], px[1::4], px[2::4], px[3::4]
-    return {
-        "width": width,
-        "height": height,
-        "n_px": n,
-        "pixels": bytes(px),
-        "r_sum": sum(rs),
-        "g_sum": sum(gs),
-        "b_sum": sum(bs),
-        "a_sum": sum(as_),
-        "r_min": min(rs) if n else 0,
-        "r_max": max(rs) if n else 0,
-    }
+    return {"width": width, "height": height, **rgba_stats(px)}

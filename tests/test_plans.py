@@ -392,28 +392,30 @@ def _hazards(df) -> list:
     )
 
 
-def _guard_fixture(spark):
+def _guard_fixture(spark, sf_dir):
     # must scan a BASE TABLE: the detector only flags segments that
     # re-execute corpus-scale work (a spark.range leaf is both cheap
     # and already range-partitioned on id, so it would be vacuous)
     from pyspark.sql import functions as F
 
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return d.select(
         "doc_id",
         F.explode(F.split(F.col("text"), " ")).alias("t"),
     ).withColumn("n", F.regexp_count("t", F.lit("[a-z]+")))
 
 
-def test_sort_sampling_guard_flags_unpinned_fixture(spark):
-    flagged = _hazards(_guard_fixture(spark).orderBy("t", "n"))
+def test_sort_sampling_guard_flags_unpinned_fixture(spark, sf_dir):
+    flagged = _hazards(_guard_fixture(spark, sf_dir).orderBy("t", "n"))
     assert flagged, "unpinned scan->Generate+regex under orderBy must flag"
     assert "Generate" in flagged[0]
 
 
-def test_sort_sampling_guard_accepts_pinned_fixture(spark):
-    pinned = _guard_fixture(spark).localCheckpoint(eager=True).orderBy(
-        "t", "n"
+def test_sort_sampling_guard_accepts_pinned_fixture(spark, sf_dir):
+    pinned = (
+        _guard_fixture(spark, sf_dir)
+        .localCheckpoint(eager=True)
+        .orderBy("t", "n")
     )
     assert _hazards(pinned) == []
 
@@ -434,7 +436,7 @@ def test_sort_sampling_guard_accepts_exchange_below_sort(spark):
 def test_sort_sampling_guard_pinned_family_clean(spark):
     """Representative members of the round-13 pin family stay pinned."""
     for name in ("text_stats", "lang_id", "fuzzy_name_match",
-                 "multimodal_features"):
+                 "multimodal_features", "multimodal_jpeg_decode"):
         plan = _plan(spark, name)
         from tools.audit_plans import range_exchange_hazards
 
@@ -442,3 +444,8 @@ def test_sort_sampling_guard_pinned_family_clean(spark):
         # range exchange in these queries
         assert "Exchange rangepartitioning" in plan, name
         assert range_exchange_hazards(plan) == [], name
+        # the pin itself sits below the range exchange: without it a
+        # shuffle further down (the codec fan-out) keeps the detector
+        # quiet while the sampler re-runs every decode
+        below = plan.split("Exchange rangepartitioning", 1)[1]
+        assert "Scan ExistingRDD" in below, name

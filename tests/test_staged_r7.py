@@ -1,9 +1,13 @@
-"""Oracle parity for the eight round-7 batch queries — the exact
-Spark-vs-DuckDB compare the driver gate runs, executed in pytest.
-These were implemented in round 6 behind a staging map (the driver
-window was full), registered in round 7, and moved verbatim to their
-home modules in round 8; this test now reads them straight from the
-registry so the pytest-level parity gate survives the move."""
+"""Oracle parity for the eight round-7 batch queries and the sixteen
+real-codec multimodal queries — the exact Spark-vs-DuckDB compare the
+driver gate runs, executed in pytest.
+The round-7 queries were implemented in round 6 behind a staging map
+(the driver window was full), registered in round 7, and moved
+verbatim to their home modules in round 8; this test reads them
+straight from the registry so the pytest-level parity gate survives
+the move. The codec queries share one decode skeleton in
+``queries/llm.py``; their oracles recompute the decoded statistics
+arithmetically, so any codec or skeleton defect breaks EXACT here."""
 
 from __future__ import annotations
 
@@ -30,8 +34,27 @@ R7_BATCH = [
     "dedup_rate_by_source",
 ]
 
+CODEC_DECODE = [
+    "multimodal_png_decode",
+    "multimodal_jpeg_decode",
+    "multimodal_gif_decode",
+    "multimodal_wav_decode",
+    "multimodal_video_frames",
+    "multimodal_bmp_decode",
+    "multimodal_qoi_decode",
+    "multimodal_tga_decode",
+    "multimodal_pcx_decode",
+    "multimodal_ico_decode",
+    "multimodal_midi_decode",
+    "multimodal_au_g711_decode",
+    "multimodal_pnm_decode",
+    "multimodal_tiff_decode",
+    "multimodal_mp3_meta",
+    "multimodal_flac_meta",
+]
 
-@pytest.mark.parametrize("name", R7_BATCH)
+
+@pytest.mark.parametrize("name", R7_BATCH + CODEC_DECODE)
 def test_r7_batch_query_is_exact_vs_oracle(spark, name):
     spec = QUERIES[name]
     sdf = spec.fn(spark, SF)
