@@ -13,7 +13,6 @@ from local_stream_stack_spark.streaming.ops import (
     sliding_windowed_agg,
     session_windowed_counts,
     dedup_within_watermark,
-    latest_per_key_stream,
     latest_per_key_stream_parquet,
     stream_static_join,
 )
@@ -23,7 +22,6 @@ __all__ = [
     "sliding_windowed_agg",
     "session_windowed_counts",
     "dedup_within_watermark",
-    "latest_per_key_stream",
     "latest_per_key_stream_parquet",
     "stream_static_join",
 ]

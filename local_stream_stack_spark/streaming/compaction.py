@@ -20,8 +20,7 @@ GENERATION per column family and commits the fold atomically:
   family, the highest epoch id folded into the generation
   (``fold_max``) and the bucket layout.  The manifest is written to a
   temp name and renamed — the single-file rename is the atomic commit
-  point, exactly the protocol of ``_write_manifest_atomic`` in
-  ``ops.py``;
+  point (``_atomic_write_json``);
 - readers resolve the LATEST committed generation and read
   ``__gen=<g>`` plus only the live epoch directories with
   ``epoch > fold_max`` — a crash mid-compaction leaves an
@@ -39,6 +38,15 @@ after a fold: replaying a folded epoch N sees the generation (which
 already contains N's rows) as "earlier" state, admits nothing new, and
 rewrites ``__epoch=N`` with a subset the resolver ignores (N ≤
 fold_max).
+
+This module is also the store layer for every view store in
+:mod:`~local_stream_stack_spark.streaming.ops`: it is the only code
+that touches the Hadoop FileSystem.  It owns both commit logs — the
+generation log above and the keyed-MERGE store's per-epoch
+``_manifests/<N>.json`` log — through one atomic JSON writer
+(``_atomic_write_json``) and one strict ``<N>.json`` commit reader
+(``_read_commits``), and it answers every "which epochs exist" question
+with committed (``_SUCCESS``) epochs only (``_committed_epoch_ids``).
 
 Reference parity note: the reference keeps no maintained stores at all
 (its offset manager was superseded by checkpointing,
@@ -67,17 +75,23 @@ def _fs(spark, path: str):
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
 
 
-def _glob_epoch_ids(spark, family_path: str) -> list[int]:
-    """Sorted epoch ids present as ``__epoch=<id>`` children."""
-    fs, _, jvm = _fs(spark, family_path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    statuses = fs.globStatus(Path(family_path.rstrip("/") + "/__epoch=*"))
+def _glob_ids(spark, dir_path: str, name: str) -> list[int]:
+    """Sorted ids present as ``<name>=<id>`` children of a directory."""
+    fs, _, jvm = _fs(spark, dir_path)
+    statuses = fs.globStatus(
+        jvm.org.apache.hadoop.fs.Path(f"{dir_path.rstrip('/')}/{name}=*")
+    )
     out = []
     for st in statuses or []:
-        m = re.fullmatch(r"__epoch=(-?\d+)", st.getPath().getName())
+        m = re.fullmatch(rf"{name}=(-?\d+)", st.getPath().getName())
         if m:
             out.append(int(m.group(1)))
     return sorted(out)
+
+
+def _glob_epoch_ids(spark, family_path: str) -> list[int]:
+    """Sorted epoch ids present as ``__epoch=<id>`` children."""
+    return _glob_ids(spark, family_path, "__epoch")
 
 
 def _committed_epoch_ids(spark, family_path: str) -> list[int]:
@@ -99,25 +113,12 @@ def _committed_epoch_ids(spark, family_path: str) -> list[int]:
     return out
 
 
-def _glob_bucket_ids(spark, gen_dir: str) -> set[int]:
-    """Bucket ids present as ``__bucket=<id>`` children of a
-    generation directory (``partitionBy`` writes only non-empty
-    buckets)."""
-    fs, _, jvm = _fs(spark, gen_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
-    statuses = fs.globStatus(Path(gen_dir.rstrip("/") + "/__bucket=*"))
-    out = set()
-    for st in statuses or []:
-        m = re.fullmatch(r"__bucket=(\d+)", st.getPath().getName())
-        if m:
-            out.add(int(m.group(1)))
-    return out
-
-
 def _atomic_write_json(spark, dir_path: str, name: str, payload: dict) -> None:
     """Write ``<dir>/<name>.json`` via temp + rename (atomic commit).
     The temp has no ``.json`` suffix so a crash leftover can never be
-    parsed as a committed manifest."""
+    parsed as a committed manifest.  Rewriting an existing record (an
+    epoch retry) replaces it with the same content, so either version
+    commits the same state."""
     fs, _, jvm = _fs(spark, dir_path)
     Path = jvm.org.apache.hadoop.fs.Path
     fs.mkdirs(Path(dir_path))
@@ -131,33 +132,64 @@ def _atomic_write_json(spark, dir_path: str, name: str, payload: dict) -> None:
     if fs.exists(final):
         fs.delete(final, False)
     if not fs.rename(tmp, final):
-        raise IOError(f"generation manifest commit failed: {name}")
+        raise IOError(f"commit failed: {dir_path}/{name}.json")
+
+
+def _load_json(fs, jvm, p) -> dict:
+    stream = fs.open(p)
+    try:
+        text = jvm.java.util.Scanner(stream, "UTF-8").useDelimiter("\\A").next()
+    finally:
+        stream.close()
+    return json.loads(text)
+
+
+def _read_json(spark, path: str) -> dict | None:
+    """Parsed contents of one small JSON file, or ``None`` if absent."""
+    fs, p, jvm = _fs(spark, path)
+    return _load_json(fs, jvm, p) if fs.exists(p) else None
+
+
+def _read_commits(spark, dir_path: str) -> list[dict]:
+    """Payloads of every COMMITTED ``<N>.json`` record in a commit-log
+    directory (``_generations/`` or the keyed-MERGE ``_manifests/``).
+
+    Strict commit-name filter: ONLY ``<N>.json`` is a commit.  Hadoop
+    ``globStatus`` does not hide dot-prefixed names, so crash-leftover
+    temps (or any stray file) must not be parsed — that would break the
+    atomic-rename guarantee (an uncommitted record visible, or a
+    JSONDecodeError on a torn write poisoning every later read)."""
+    fs, p, jvm = _fs(spark, dir_path)
+    if not fs.exists(p):
+        return []
+    Path = jvm.org.apache.hadoop.fs.Path
+    return [
+        _load_json(fs, jvm, st.getPath())
+        for st in fs.globStatus(Path(dir_path + "/*.json")) or []
+        if re.fullmatch(r"\d+\.json", st.getPath().getName())
+    ]
+
+
+def latest_epoch_dir(
+    spark, family_path: str, before: int | None = None
+) -> str | None:
+    """Directory of the newest committed epoch of a family (strictly
+    below ``before`` when given), or ``None`` if there is none — the
+    driver-side answer to "latest earlier epoch", no Spark job."""
+    ids = [
+        e
+        for e in _committed_epoch_ids(spark, family_path)
+        if before is None or e < before
+    ]
+    return f"{family_path.rstrip('/')}/__epoch={max(ids)}" if ids else None
 
 
 def _read_generations(spark, store_path: str) -> dict[int, dict]:
     """{gen: manifest} for every COMMITTED generation manifest."""
-    mdir = store_path.rstrip("/") + "/" + _GEN_DIR
-    fs, _, jvm = _fs(spark, mdir)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(Path(mdir)):
-        return {}
-    out: dict[int, dict] = {}
-    for st in fs.globStatus(Path(mdir + "/*.json")) or []:
-        # strict commit-name filter, same rationale as _read_manifests
-        if not re.fullmatch(r"\d+\.json", st.getPath().getName()):
-            continue
-        stream = fs.open(st.getPath())
-        try:
-            text = (
-                jvm.java.util.Scanner(stream, "UTF-8")
-                .useDelimiter("\\A")
-                .next()
-            )
-        finally:
-            stream.close()
-        m = json.loads(text)
-        out[int(m["gen"])] = m
-    return out
+    return {
+        int(m["gen"]): m
+        for m in _read_commits(spark, store_path.rstrip("/") + "/" + _GEN_DIR)
+    }
 
 
 def latest_generation(spark, store_path: str):
@@ -237,7 +269,7 @@ def read_family(
             # only non-empty buckets exist as directories (an all-empty
             # fold writes none); prune the request to what's on disk so
             # the scan never 404s
-            existing = _glob_bucket_ids(spark, gen_dir)
+            existing = set(_glob_ids(spark, gen_dir, "__bucket"))
             wanted = (
                 existing
                 if bucket_in is None

@@ -12,15 +12,47 @@ standard Structured Streaming plan:
 - latest-per-key uses foreachBatch + an idempotent overwrite, the
   exactly-once materialization pattern for compacted-topic views
   (reference data semantics A15/A16, `sample_kafka_process.sh:165-215`)
+
+Store layer: every maintained view here persists per-epoch parquet
+directories (``__epoch=<id>``, overwritten by a replayed epoch) and,
+for the keyed-MERGE view, atomically renamed ``_manifests/<N>.json``
+commit records.  This module only builds DataFrames and writes epoch
+directories; everything that lists, reads or commits store metadata —
+committed-epoch listing, the latest earlier epoch, both commit logs,
+deletes — goes through :mod:`~local_stream_stack_spark.streaming.compaction`,
+so every reader sees committed (``_SUCCESS``) epochs only.
 """
 
 from __future__ import annotations
 
-import re
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from local_stream_stack_spark.streaming import compaction
+
+
+def _foreach_batch(
+    df: DataFrame, fn, checkpoint_location: str, output_mode: str = "append"
+):
+    """Start ``df`` with ``fn`` as its foreachBatch sink."""
+    return (
+        df.writeStream.outputMode(output_mode)
+        .foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_location)
+        .start()
+    )
+
+
+def _write_epoch(df: DataFrame, family_path: str, epoch_id: int, *sort_by):
+    """Idempotent epoch write: overwrite ``<family>/__epoch=<id>`` with
+    one file (optionally sorted), so a replayed epoch rewrites exactly
+    its own directory."""
+    out = df.coalesce(1)
+    if sort_by:
+        out = out.sortWithinPartitions(*sort_by)
+    out.write.mode("overwrite").parquet(f"{family_path}/__epoch={epoch_id}")
 
 
 def windowed_counts(
@@ -112,36 +144,6 @@ def dedup_within_watermark(
     )
 
 
-def latest_per_key_stream(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_col: str,
-    target_path: str,
-    checkpoint_location: str,
-    tombstone_predicate: str | None = None,
-    n_buckets: int = 32,
-):
-    """Materialize a compacted (latest-per-key) view of a stream —
-    the reference's compacted-topic semantics (A15/A16) without Kafka.
-
-    DEFAULT = the bucket-partitioned parquet MERGE path
-    (``latest_per_key_stream_parquet``): per-epoch cost proportional
-    to touched buckets, no driver-side materialization of the view.
-    The driver-collect variant survives only as the explicitly named
-    test helper ``_latest_per_key_stream_tempview`` — its state lives
-    on the driver and grows with key cardinality, which is an OOM at
-    scale, never a default."""
-    return latest_per_key_stream_parquet(
-        df,
-        keys=keys,
-        order_col=order_col,
-        target_path=target_path,
-        checkpoint_location=checkpoint_location,
-        tombstone_predicate=tombstone_predicate,
-        n_buckets=n_buckets,
-    )
-
-
 def _latest_per_key_stream_tempview(
     df: DataFrame,
     keys: Sequence[str],
@@ -155,8 +157,8 @@ def _latest_per_key_stream_tempview(
     Collects the merged view to the driver every epoch: state grows
     with key cardinality, so this is ONLY for small unit-test streams
     where inspecting the view as a temp table is convenient. Use
-    ``latest_per_key_stream`` (parquet MERGE, bucket-pruned) for
-    anything real; it is the default for a reason.
+    ``latest_per_key_stream_parquet`` (parquet MERGE, bucket-pruned)
+    for anything real; it is the default for a reason.
     """
     from local_stream_stack_spark.operators.events import latest_per_key
 
@@ -181,12 +183,7 @@ def _latest_per_key_stream_tempview(
             target_table
         )
 
-    return (
-        df.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_location)
-        .start()
-    )
+    return _foreach_batch(df, upsert, checkpoint_location, "update")
 
 
 def latest_per_key_stream_parquet(
@@ -199,9 +196,11 @@ def latest_per_key_stream_parquet(
     n_buckets: int = 32,
 ):
     """Materialize a compacted (latest-per-key) view of a stream into a
-    bucket-partitioned parquet table — the scale form of
-    ``latest_per_key_stream`` (which keeps the view in a driver-side
-    temp view for unit tests).
+    bucket-partitioned parquet table — the reference's compacted-topic
+    semantics (A15/A16) without Kafka.  Parquet MERGE is THE form: the
+    driver-collect twin ``_latest_per_key_stream_tempview`` survives
+    only as a test helper, because its state lives on the driver and
+    grows with key cardinality (an OOM at scale, never a default).
 
     The view is partitioned by ``__bucket = pmod(xxhash64(keys), B)``.
     Each micro-batch reduces to latest-per-key, reads back ONLY the
@@ -236,8 +235,6 @@ def latest_per_key_stream_parquet(
     whose last live key is deleted still rewrites, and a later update
     resurrects the key); ``read_compacted_view`` filters them out.
     """
-    import json
-
     from local_stream_stack_spark.operators.events import latest_per_key
 
     spark = df.sparkSession
@@ -265,12 +262,14 @@ def latest_per_key_stream_parquet(
         # touched buckets with only this batch's keys, permanently
         # deleting every other key in them; checkpoint retry preserves
         # correctness instead.
-        latest_by_bucket = _manifest_latest_by_bucket(
-            spark, target_path, before_epoch=epoch_id
-        )
+        earlier = {
+            e: bl
+            for e, bl in _read_manifests(spark, target_path).items()
+            if e < epoch_id
+        }
         current_dirs = [
             f"{data_path}/__epoch={e}/__bucket={b}"
-            for b, e in latest_by_bucket.items()
+            for b, e in _latest_by_bucket(earlier).items()
             if b in set(touched)
         ]
         if current_dirs:
@@ -302,11 +301,11 @@ def latest_per_key_stream_parquet(
         )
         # 2) COMMIT: single-file manifest rename — before this rename
         #    readers cannot see any epoch-N file
-        _write_manifest_atomic(
+        compaction._atomic_write_json(
             spark,
-            target_path,
-            epoch_id,
-            json.dumps({"epoch": epoch_id, "buckets": sorted(touched)}),
+            _manifest_dir(target_path),
+            str(epoch_id),
+            {"epoch": epoch_id, "buckets": sorted(touched)},
         )
         # 3) best-effort GC, DEFERRED BY ONE EPOCH: delete only bucket
         #    dirs superseded by an epoch STRICTLY BEFORE N. The dir
@@ -317,124 +316,77 @@ def latest_per_key_stream_parquet(
         #    wedge every retry on path-not-found. It becomes eligible
         #    at epoch N+1's commit, by which time the checkpoint has
         #    committed N and no N-retry can occur. Re-deleting an
-        #    already-GC'd path is a driver-side no-op.
+        #    already-GC'd path is a driver-side no-op. ``earlier`` (the
+        #    pre-state read) is exactly the manifest set this needs.
         try:
-            committed = _read_manifests(spark, target_path)
             for b in touched:
-                epochs_b = sorted(
-                    e
-                    for e, bl in committed.items()
-                    if e < epoch_id and b in bl
-                )
+                epochs_b = sorted(e for e, bl in earlier.items() if b in bl)
                 for e in epochs_b[:-1]:
-                    _delete_path(
+                    compaction._delete(
                         spark, f"{data_path}/__epoch={e}/__bucket={b}"
                     )
         except Exception:
             pass  # unreferenced files are invisible to readers
 
-    return (
-        df.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_location)
-        .start()
-    )
+    return _foreach_batch(df, upsert, checkpoint_location, "update")
 
 
 def _manifest_dir(target_path: str) -> str:
     return target_path.rstrip("/") + "/_manifests"
 
 
-def _write_manifest_atomic(
-    spark, target_path: str, epoch_id: int, payload: str
-) -> None:
-    """Commit one epoch: write a non-``.json`` temp ``.tmp-<N>`` then rename to
-    ``<N>.json`` (single-file rename = the atomic commit point). An
-    epoch retry replaces its own manifest — same merged content, so
-    either version of the file commits the same state."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    mdir = _manifest_dir(target_path)
-    fs = Path(mdir).getFileSystem(hconf)
-    fs.mkdirs(Path(mdir))
-    # No .json suffix on the temp: Hadoop globStatus does NOT hide
-    # dot-prefixed files, so a crash-leftover temp named *.json would
-    # be read back as a committed manifest by _read_manifests.
-    tmp = Path(f"{mdir}/.tmp-{epoch_id}")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(payload.encode("utf-8")))
-    finally:
-        out.close()
-    final = Path(f"{mdir}/{epoch_id}.json")
-    if fs.exists(final):
-        fs.delete(final, False)
-    if not fs.rename(tmp, final):
-        raise IOError(f"manifest commit failed for epoch {epoch_id}")
-
-
 def _read_manifests(spark, target_path: str) -> dict[int, list[int]]:
-    """{epoch: [bucket_ids]} for every COMMITTED manifest. Tiny files,
-    read driver-side through the Hadoop FS API (no Spark job per
-    epoch)."""
-    import json
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    mdir = _manifest_dir(target_path)
-    fs = Path(mdir).getFileSystem(hconf)
-    if not fs.exists(Path(mdir)):
-        return {}
-    statuses = fs.globStatus(Path(mdir + "/*.json"))
-    out: dict[int, list[int]] = {}
-    for st in statuses or []:
-        p = st.getPath()
-        # Strict commit-name filter: ONLY <epoch>.json is a committed
-        # manifest. Hadoop globStatus does not exclude dot-prefixed
-        # names, so crash-leftover temps (or any stray file) must not
-        # be parsed as commits — that would break the atomic-rename
-        # guarantee (uncommitted epoch visible, or JSONDecodeError on
-        # a torn write poisoning every subsequent read).
-        if not re.fullmatch(r"\d+\.json", p.getName()):
-            continue
-        stream = fs.open(p)
-        try:
-            text = (
-                jvm.java.util.Scanner(stream, "UTF-8")
-                .useDelimiter("\\A")
-                .next()
-            )
-        finally:
-            stream.close()
-        m = json.loads(text)
-        out[int(m["epoch"])] = [int(b) for b in m["buckets"]]
-    return out
+    """{epoch: [bucket_ids]} for every COMMITTED keyed-MERGE manifest."""
+    return {
+        int(m["epoch"]): [int(b) for b in m["buckets"]]
+        for m in compaction._read_commits(spark, _manifest_dir(target_path))
+    }
 
 
-def _manifest_latest_by_bucket(
-    spark, target_path: str, before_epoch: int | None = None
-) -> dict[int, int]:
-    """{bucket: latest committed epoch that wrote it}, optionally
-    restricted to epochs strictly below ``before_epoch`` (the
-    retry-safe pre-state view)."""
+def _latest_by_bucket(manifests: dict[int, list[int]]) -> dict[int, int]:
+    """{bucket: latest epoch among ``manifests`` that wrote it}."""
     latest: dict[int, int] = {}
-    for epoch, buckets in _read_manifests(spark, target_path).items():
-        if before_epoch is not None and epoch >= before_epoch:
-            continue
+    for epoch, buckets in manifests.items():
         for b in buckets:
             if b not in latest or epoch > latest[b]:
                 latest[b] = epoch
     return latest
 
 
-def _delete_path(spark, path: str) -> None:
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(hconf)
-    fs.delete(p, True)
+def _epoch_delta_view(
+    df: DataFrame,
+    target_path: str,
+    checkpoint_location: str,
+    delta,
+    compact,
+    compact_every_n_epochs: int | None,
+    output_mode: str,
+):
+    """The epoch-delta view writer shared by the aggregate, minmax,
+    bitmap and KMV views: each micro-batch writes ``delta(batch)`` to
+    its own epoch directory, then ``compact(spark, target_path)`` folds
+    the store once ``compact_every_n_epochs`` live epochs accumulate
+    (off the admit path — between micro-batches)."""
+
+    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
+        _write_epoch(delta(batch_df), target_path, epoch_id)
+        spark = batch_df.sparkSession
+        compaction.auto_compact_if_due(
+            spark,
+            target_path,
+            compact_every_n_epochs,
+            lambda: compact(spark, target_path),
+        )
+
+    return _foreach_batch(df, upsert, checkpoint_location, output_mode)
+
+
+def _read_folded(spark, target_path: str, fold, what: str) -> DataFrame:
+    """``fold`` over an epoch-delta view's generation + live epochs."""
+    deltas = compaction.read_family(spark, target_path, "")
+    if deltas is None:
+        raise FileNotFoundError(f"empty {what} view at {target_path}")
+    return fold(deltas)
 
 
 def aggregate_view_stream_parquet(
@@ -469,33 +421,17 @@ def aggregate_view_stream_parquet(
     """
     key_list = list(keys)
     sums = list(sum_cols)
-
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = batch_df.groupBy(*key_list).agg(
+    return _epoch_delta_view(
+        df,
+        target_path,
+        checkpoint_location,
+        lambda b: b.groupBy(*key_list).agg(
             F.count("*").alias("n_rows"),
             *[F.sum(c).alias(f"sum_{c}") for c in sums],
-        )
-        (
-            delta.coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{target_path}/__epoch={epoch_id}")
-        )
-        if compact_every_n_epochs:
-            from local_stream_stack_spark.streaming import compaction
-
-            spark = batch_df.sparkSession
-            compaction.auto_compact_if_due(
-                spark,
-                target_path,
-                compact_every_n_epochs,
-                lambda: compact_aggregate_view(spark, target_path),
-            )
-
-    return (
-        df.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_location)
-        .start()
+        ),
+        compact_aggregate_view,
+        compact_every_n_epochs,
+        "update",
     )
 
 
@@ -519,34 +455,18 @@ def minmax_view_stream_parquet(
     into one base generation, and ``compact_every_n_epochs`` triggers
     the fold automatically off the admit path."""
     key_list = list(keys)
-
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = batch_df.groupBy(*key_list).agg(
+    return _epoch_delta_view(
+        df,
+        target_path,
+        checkpoint_location,
+        lambda b: b.groupBy(*key_list).agg(
             F.min(val_col).alias("min_v"),
             F.max(val_col).alias("max_v"),
             F.count("*").alias("n_rows"),
-        )
-        (
-            delta.coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{target_path}/__epoch={epoch_id}")
-        )
-        if compact_every_n_epochs:
-            from local_stream_stack_spark.streaming import compaction
-
-            spark = batch_df.sparkSession
-            compaction.auto_compact_if_due(
-                spark,
-                target_path,
-                compact_every_n_epochs,
-                lambda: compact_minmax_view(spark, target_path),
-            )
-
-    return (
-        df.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_location)
-        .start()
+        ),
+        compact_minmax_view,
+        compact_every_n_epochs,
+        "update",
     )
 
 
@@ -572,9 +492,11 @@ def bitmap_view_stream_parquet(
     re-merges into one base, ``compact_every_n_epochs`` auto-triggers
     the fold off the admit path."""
     flags = list(flag_cols)
-
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = batch_df.groupBy(zone_col).agg(
+    return _epoch_delta_view(
+        df,
+        target_path,
+        checkpoint_location,
+        lambda b: b.groupBy(zone_col).agg(
             *[
                 F.expr(
                     f"bit_or(CASE WHEN {c} = 1 THEN"
@@ -585,28 +507,10 @@ def bitmap_view_stream_parquet(
                 .alias(f"m_{c}")
                 for c in flags
             ]
-        )
-        (
-            delta.coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{target_path}/__epoch={epoch_id}")
-        )
-        if compact_every_n_epochs:
-            from local_stream_stack_spark.streaming import compaction
-
-            spark = batch_df.sparkSession
-            compaction.auto_compact_if_due(
-                spark,
-                target_path,
-                compact_every_n_epochs,
-                lambda: compact_bitmap_view(spark, target_path),
-            )
-
-    return (
-        df.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_location)
-        .start()
+        ),
+        compact_bitmap_view,
+        compact_every_n_epochs,
+        "update",
     )
 
 
@@ -629,20 +533,13 @@ def read_bitmap_view(spark, target_path: str) -> DataFrame:
     """Current per-zone masks of a ``bitmap_view_stream_parquet``
     view: OR-fold of the compacted base generation (if any) plus all
     live epoch deltas."""
-    from local_stream_stack_spark.streaming import compaction
-
-    deltas = compaction.read_family(spark, target_path, "")
-    if deltas is None:
-        raise FileNotFoundError(f"empty bitmap view at {target_path}")
-    return _bitmap_fold(deltas)
+    return _read_folded(spark, target_path, _bitmap_fold, "bitmap")
 
 
 def compact_bitmap_view(spark, target_path: str) -> int:
     """Fold all epoch deltas of a bitmap view into one base
     generation (idempotent-associative OR re-merge), committed
     atomically through the generation manifest."""
-    from local_stream_stack_spark.streaming import compaction
-
     return compaction.compact_store(
         spark, target_path, {"": {"fold": _bitmap_fold}}
     )
@@ -664,23 +561,22 @@ def read_minmax_view(spark, target_path: str) -> DataFrame:
     """Current per-key (min, max, count) of a
     ``minmax_view_stream_parquet`` view: fold of the compacted base
     generation (if any) plus all live epoch deltas."""
-    from local_stream_stack_spark.streaming import compaction
-
-    deltas = compaction.read_family(spark, target_path, "")
-    if deltas is None:
-        raise FileNotFoundError(f"empty minmax view at {target_path}")
-    return _minmax_fold(deltas)
+    return _read_folded(spark, target_path, _minmax_fold, "minmax")
 
 
 def compact_minmax_view(spark, target_path: str) -> int:
     """Fold all epoch deltas of a minmax view into one base
     generation (associative min/max + additive count re-merge),
     committed atomically through the generation manifest."""
-    from local_stream_stack_spark.streaming import compaction
-
     return compaction.compact_store(
         spark, target_path, {"": {"fold": _minmax_fold}}
     )
+
+
+def _sum_fold(df: DataFrame) -> DataFrame:
+    value_cols = [c for c in df.columns if c.startswith("sum_") or c == "n_rows"]
+    key_cols = [c for c in df.columns if c not in value_cols and c != "__epoch"]
+    return df.groupBy(*key_cols).agg(*[F.sum(c).alias(c) for c in value_cols])
 
 
 def read_aggregate_view(spark, target_path: str) -> DataFrame:
@@ -688,16 +584,7 @@ def read_aggregate_view(spark, target_path: str) -> DataFrame:
     sum of the compacted base generation (if any) plus all live epoch
     deltas per key (additivity makes the fold exact whatever mix of
     generation and epochs is on disk)."""
-    from local_stream_stack_spark.streaming import compaction
-
-    deltas = compaction.read_family(spark, target_path, "")
-    if deltas is None:
-        raise FileNotFoundError(f"empty aggregate view at {target_path}")
-    value_cols = [c for c in deltas.columns if c.startswith("sum_") or c == "n_rows"]
-    key_cols = [c for c in deltas.columns if c not in value_cols and c != "__epoch"]
-    return deltas.groupBy(*key_cols).agg(
-        *[F.sum(c).alias(c) for c in value_cols]
-    )
+    return _read_folded(spark, target_path, _sum_fold, "aggregate")
 
 
 def compact_aggregate_view(spark, target_path: str) -> int:
@@ -709,25 +596,10 @@ def compact_aggregate_view(spark, target_path: str) -> int:
     an HDFS/S3 store). Run periodically so read-side fan-in stays
     bounded; the fold is safe because the totals are themselves an
     additive delta. Returns the new generation id."""
-    from local_stream_stack_spark.streaming import compaction
-
-    probe = compaction.read_family(spark, target_path, "")
-    if probe is None:
+    if compaction.read_family(spark, target_path, "") is None:
         raise FileNotFoundError(f"empty aggregate view at {target_path}")
-    value_cols = [
-        c for c in probe.columns if c.startswith("sum_") or c == "n_rows"
-    ]
-    key_cols = [
-        c for c in probe.columns if c not in value_cols and c != "__epoch"
-    ]
-
-    def fold(df: DataFrame) -> DataFrame:
-        return df.groupBy(*key_cols).agg(
-            *[F.sum(c).alias(c) for c in value_cols]
-        )
-
     return compaction.compact_store(
-        spark, target_path, {"": {"fold": fold}}
+        spark, target_path, {"": {"fold": _sum_fold}}
     )
 
 
@@ -740,7 +612,7 @@ def read_compacted_view(spark, target_path: str) -> DataFrame:
     files (a crash mid-write) are invisible, which is the read half
     of the atomic-commit protocol."""
     data_path = target_path.rstrip("/") + "/data"
-    latest_by_bucket = _manifest_latest_by_bucket(spark, target_path)
+    latest_by_bucket = _latest_by_bucket(_read_manifests(spark, target_path))
     if not latest_by_bucket:
         raise FileNotFoundError(
             f"no committed manifests under {target_path}"
@@ -960,8 +832,6 @@ def ingest_dedup_stream_parquet(
         # compacted rows __epoch = -1 (always earlier; a replayed folded
         # epoch then collides with its own rows in the generation and
         # re-admits nothing, keeping the store exactly-once).
-        from local_stream_stack_spark.streaming import compaction
-
         store_df = compaction.read_family(
             spark, store_path, "", with_epoch=True
         )
@@ -988,63 +858,20 @@ def ingest_dedup_stream_parquet(
             novel = batch_unique.join(F.broadcast(hit), fp_col, "left_anti")
         else:
             novel = batch_unique
-        (
-            novel.coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{store_path}/__epoch={epoch_id}")
-        )
-        if compact_every_n_epochs:
-            from local_stream_stack_spark.streaming import compaction
-
-            compaction.auto_compact_if_due(
+        _write_epoch(novel, store_path, epoch_id)
+        compaction.auto_compact_if_due(
+            spark,
+            store_path,
+            compact_every_n_epochs,
+            lambda: compaction.compact_ingest_store(
                 spark,
                 store_path,
-                compact_every_n_epochs,
-                lambda: compaction.compact_ingest_store(
-                    spark,
-                    store_path,
-                    fp_col=fp_col,
-                    n_buckets=compact_n_buckets,
-                ),
-            )
+                fp_col=fp_col,
+                n_buckets=compact_n_buckets,
+            ),
+        )
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(admit)
-        .option("checkpointLocation", checkpoint_location)
-        .start()
-    )
-
-
-def _store_has_epochs(spark, base_path: str) -> bool:
-    """True iff the store has at least one ``__epoch=*`` directory.
-
-    Explicit existence probe (Hadoop FileSystem API, so any supported
-    scheme works) instead of try/except around the read: only a MISSING
-    store means "first epoch". A transient or corruption error on the
-    store read must propagate and fail the batch — swallowing it would
-    silently admit the whole batch as novel and write permanent
-    duplicates with no signal; the checkpoint retry preserves
-    correctness instead."""
-    return _path_has_partitions(spark, base_path, "__epoch=*")
-
-
-def _path_has_partitions(spark, base_path: str, glob: str) -> bool:
-    """True iff ``base_path`` exists and contains at least one child
-    matching ``glob`` (e.g. ``__epoch=*``, ``__bucket=*``). Hadoop
-    FileSystem API so any supported scheme works; used as the
-    first-epoch probe for streaming view stores so that only a MISSING
-    store short-circuits — any other read error propagates."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(base_path)
-    fs = path.getFileSystem(hconf)
-    if not fs.exists(path):
-        return False
-    statuses = fs.globStatus(
-        jvm.org.apache.hadoop.fs.Path(base_path.rstrip("/") + "/" + glob)
-    )
-    return statuses is not None and len(statuses) > 0
+    return _foreach_batch(df, admit, checkpoint_location)
 
 
 def read_ingest_store(spark, store_path: str) -> DataFrame:
@@ -1053,8 +880,6 @@ def read_ingest_store(spark, store_path: str) -> DataFrame:
     epoch deltas beyond its fold point — resolved through the
     generation manifest so a compacted and an uncompacted store read
     identically (``streaming/compaction.py``)."""
-    from local_stream_stack_spark.streaming import compaction
-
     df = compaction.read_family(spark, store_path, "")
     if df is None:
         raise FileNotFoundError(f"empty ingest store at {store_path}")
@@ -1138,8 +963,6 @@ def ingest_neardup_stream_parquet(
         # every document would collide with itself, turning the epoch
         # overwrite into a permanent delete. Store-read errors propagate
         # (only a missing store means "first epoch").
-        from local_stream_stack_spark.streaming import compaction
-
         keys_df = compaction.read_family(
             spark, store_path, "keys", with_epoch=True
         )
@@ -1184,47 +1007,41 @@ def ingest_neardup_stream_parquet(
             hit_batch if hit_store is None else hit_batch.union(hit_store).distinct()
         ).localCheckpoint(eager=True)  # consumed by BOTH anti-joins below
         admitted = batch_df.join(rejected, id_col, "left_anti")
-        admitted.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/rows/__epoch={epoch_id}"
-        )
+        _write_epoch(admitted, f"{store_path}/rows", epoch_id)
         # keys land SORTED by (band, bh): every epoch file then has
         # tight parquet row-group zone maps on the lookup key, so any
         # pushed or runtime filter (bloom/min-max) can skip row groups
         # during the next epochs' store semi-joins — the cheap half of
         # the store-growth mitigation (the 100 TB design routes this
         # lookup through an indexed state store; see SCALE.md)
-        keys.join(rejected, id_col, "left_anti").select(
-            id_col, "band", "bh"
-        ).coalesce(1).sortWithinPartitions("band", "bh").write.mode(
-            "overwrite"
-        ).parquet(f"{store_path}/keys/__epoch={epoch_id}")
-        if compact_every_n_epochs:
-            compaction.auto_compact_if_due(
+        _write_epoch(
+            keys.join(rejected, id_col, "left_anti").select(
+                id_col, "band", "bh"
+            ),
+            f"{store_path}/keys",
+            epoch_id,
+            "band",
+            "bh",
+        )
+        compaction.auto_compact_if_due(
+            spark,
+            store_path,
+            compact_every_n_epochs,
+            lambda: compaction.compact_neardup_store(
                 spark,
                 store_path,
-                compact_every_n_epochs,
-                lambda: compaction.compact_neardup_store(
-                    spark,
-                    store_path,
-                    id_col=id_col,
-                    n_buckets=compact_n_buckets,
-                ),
-                probe_family="rows",
-            )
+                id_col=id_col,
+                n_buckets=compact_n_buckets,
+            ),
+            probe_family="rows",
+        )
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(admit)
-        .option("checkpointLocation", checkpoint_location)
-        .start()
-    )
+    return _foreach_batch(df, admit, checkpoint_location)
 
 
 def read_neardup_store(spark, store_path: str) -> DataFrame:
     """Admitted rows of an ``ingest_neardup_stream_parquet`` store
     (generation + live epoch deltas, manifest-resolved)."""
-    from local_stream_stack_spark.streaming import compaction
-
     df = compaction.read_family(spark, store_path, "rows")
     if df is None:
         raise FileNotFoundError(f"empty near-dup store at {store_path}")
@@ -1281,6 +1098,16 @@ def ingest_neardup_stream_tws(
     changelog-checkpoints incrementally. Per-epoch cost tracks batch
     size, not corpus size — SCALE.md compares the two store shapes at
     the multi-decade key counts.
+
+    Restart stability: claims are sharded by ``pmod(xxhash64(band, bh),
+    n_shards)``, so ``n_shards`` is part of the state layout. The first
+    start records ``max(8, defaultParallelism)`` in
+    ``<store_path>/_tws_shards.json``; every later start reuses the
+    recorded count whatever the restarted cluster's parallelism, so a
+    restart never moves a claim to another shard. A store with no record
+    yet (new, or written before the record existed) records the count of
+    the start that finds it missing — an old store restarted on hardware
+    with a different parallelism is re-sharded that one time.
     """
     from local_stream_stack_spark.operators.dedup import (
         minhash_band_keys_rowwise,
@@ -1308,17 +1135,6 @@ def ingest_neardup_stream_tws(
             checkpoint_location=checkpoint_location,
         )
 
-    def write_admitted(verdicts: DataFrame, epoch_id: int) -> None:
-        adm = (
-            verdicts.groupBy(id_col)
-            .agg(F.max(F.col("hit").cast("int")).alias("__h"))
-            .filter(F.col("__h") == 0)
-            .select(id_col)
-        )
-        adm.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/rows/__epoch={epoch_id}"
-        )
-
     # Fallback (no TWS runtime anywhere): same seen-claims semantics on
     # the parquet key store — epoch N looks up strictly-earlier seen
     # keys via the broadcast-probe shape and then records ALL of its
@@ -1327,13 +1143,13 @@ def ingest_neardup_stream_tws(
     def admit_fallback(kbatch: DataFrame, epoch_id: int) -> None:
         spark = kbatch.sparkSession
         kbatch = kbatch.localCheckpoint(eager=True)
-        if _store_has_epochs(spark, f"{store_path}/keys"):
-            known = (
-                spark.read.option("basePath", f"{store_path}/keys")
-                .parquet(f"{store_path}/keys/__epoch=*")
-                .filter(F.col("__epoch") < F.lit(int(epoch_id)))
-                .select("band", "bh")
-            )
+        keys_df = compaction.read_family(
+            spark, store_path, "keys", with_epoch=True
+        )
+        if keys_df is not None:
+            known = keys_df.filter(
+                F.col("__epoch") < F.lit(int(epoch_id))
+            ).select("band", "bh")
             hit_store = (
                 known.join(
                     F.broadcast(kbatch.select("band", "bh", id_col)),
@@ -1360,19 +1176,45 @@ def ingest_neardup_stream_tws(
                     "hit"
                 ),
             )
-        write_admitted(verdicts, epoch_id)
-        kbatch.select(id_col, "band", "bh").coalesce(
-            1
-        ).sortWithinPartitions("band", "bh").write.mode("overwrite").parquet(
-            f"{store_path}/keys/__epoch={epoch_id}"
+        _write_admitted(verdicts, epoch_id, store_path, id_col)
+        _write_epoch(
+            kbatch.select(id_col, "band", "bh"),
+            f"{store_path}/keys",
+            epoch_id,
+            "band",
+            "bh",
         )
 
-    return (
-        keys.writeStream.outputMode("append")
-        .foreachBatch(admit_fallback)
-        .option("checkpointLocation", checkpoint_location)
-        .start()
+    return _foreach_batch(keys, admit_fallback, checkpoint_location)
+
+
+def _write_admitted(
+    verdicts: DataFrame, epoch_id: int, store_path: str, id_col: str
+) -> None:
+    """Fold per-key (doc, hit) verdicts per doc and write the admitted
+    ids (no hit on any band) to ``rows/__epoch=<id>``."""
+    _write_epoch(
+        verdicts.groupBy(id_col)
+        .agg(F.max(F.col("hit").cast("int")).alias("__h"))
+        .filter(F.col("__h") == 0)
+        .select(id_col),
+        f"{store_path}/rows",
+        epoch_id,
     )
+
+
+def _tws_shard_count(spark, store_path: str) -> int:
+    """The store's recorded claim-shard count; on first start, record
+    ``max(8, defaultParallelism)`` in ``<store>/_tws_shards.json``."""
+    store = store_path.rstrip("/")
+    rec = compaction._read_json(spark, f"{store}/_tws_shards.json")
+    if rec is not None:
+        return int(rec["n_shards"])
+    n_shards = max(8, spark.sparkContext.defaultParallelism)
+    compaction._atomic_write_json(
+        spark, store, "_tws_shards", {"n_shards": n_shards}
+    )
+    return n_shards
 
 
 def neardup_claims_stream_tws(
@@ -1403,17 +1245,6 @@ def neardup_claims_stream_tws(
 
     ship_protobuf_bundle(keys.sparkSession)
 
-    def write_admitted(verdicts: DataFrame, epoch_id: int) -> None:
-        adm = (
-            verdicts.groupBy(id_col)
-            .agg(F.max(F.col("hit").cast("int")).alias("__h"))
-            .filter(F.col("__h") == 0)
-            .select(id_col)
-        )
-        adm.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/rows/__epoch={epoch_id}"
-        )
-
     # State layout (r14): grouping directly on (band, bh) dispatched
     # one Python handleInputRows call (plus an Arrow group boundary
     # and 1-2 state-server round trips) PER DISTINCT BAND KEY —
@@ -1435,9 +1266,9 @@ def neardup_claims_stream_tws(
     # the r13 point-probe layout (one state key per bucket) measured
     # 10x slower end to end because per-key dispatch dominates any
     # probe saving at every corpus size where epochs are file-sized.
-    n_shards = max(
-        8, keys.sparkSession.sparkContext.defaultParallelism
-    )
+    # The count is part of the state layout, so it is fixed per store
+    # (``_tws_shard_count``): a restart never re-shards the claims.
+    n_shards = _tws_shard_count(keys.sparkSession, store_path)
     sharded = keys.withColumn(
         "__shard",
         F.pmod(F.xxhash64(F.col("band"), F.col("bh")), F.lit(n_shards)).cast(
@@ -1476,19 +1307,22 @@ def neardup_claims_stream_tws(
         outputMode="Update",
         timeMode="None",
     )
-    return (
-        verdict_stream.writeStream.outputMode("update")
-        .foreachBatch(write_admitted)
-        .option("checkpointLocation", checkpoint_location)
-        .start()
+    return _foreach_batch(
+        verdict_stream,
+        lambda verdicts, epoch_id: _write_admitted(
+            verdicts, epoch_id, store_path, id_col
+        ),
+        checkpoint_location,
+        "update",
     )
 
 
 def read_neardup_tws_store(spark, store_path: str) -> DataFrame:
     """Admitted doc ids of an ``ingest_neardup_stream_tws`` store."""
-    return spark.read.option("basePath", f"{store_path}/rows").parquet(
-        f"{store_path}/rows/__epoch=*"
-    ).drop("__epoch")
+    df = compaction.read_family(spark, store_path, "rows")
+    if df is None:
+        raise FileNotFoundError(f"empty near-dup TWS store at {store_path}")
+    return df
 
 
 def scd2_dimension_stream_parquet(
@@ -1571,22 +1405,10 @@ def scd2_dimension_stream_parquet(
                 )).cast("int"),
             )
         )
-        if _path_has_partitions(spark, f"{target_path}/open", "__epoch=*"):
-            prev_epochs = [
-                int(p.split("=", 1)[1])
-                for p in _list_partitions(spark, f"{target_path}/open")
-                if int(p.split("=", 1)[1]) < epoch_id
-            ]
-        else:
-            prev_epochs = []
-        if prev_epochs:
-            tails = (
-                spark.read.option("basePath", f"{target_path}/open")
-                .parquet(f"{target_path}/open/__epoch={max(prev_epochs)}")
-                .drop("__epoch")
-            )
-        else:
-            tails = None
+        tails_dir = compaction.latest_epoch_dir(
+            spark, f"{target_path}/open", before=epoch_id
+        )
+        tails = spark.read.parquet(tails_dir) if tails_dir else None
 
         firsts = chained.filter(F.col("__is_first") == 1).select(
             F.col(key_col),
@@ -1651,46 +1473,21 @@ def scd2_dimension_stream_parquet(
             new_open = new_open.unionByName(
                 carried.select(key_col, attr_col, "valid_from")
             )
-        closed.coalesce(1).write.mode("overwrite").parquet(
-            f"{target_path}/closed/__epoch={epoch_id}"
-        )
-        new_open.coalesce(1).write.mode("overwrite").parquet(
-            f"{target_path}/open/__epoch={epoch_id}"
-        )
+        _write_epoch(closed, f"{target_path}/closed", epoch_id)
+        _write_epoch(new_open, f"{target_path}/open", epoch_id)
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_location)
-        .start()
-    )
-
-
-def _list_partitions(spark, base_path: str) -> list[str]:
-    """Names of ``__epoch=*`` children under a view family dir."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(base_path)
-    fs = path.getFileSystem(hconf)
-    statuses = fs.globStatus(
-        jvm.org.apache.hadoop.fs.Path(base_path.rstrip("/") + "/__epoch=*")
-    )
-    return [s.getPath().getName() for s in statuses] if statuses else []
+    return _foreach_batch(df, fold, checkpoint_location)
 
 
 def read_scd2_dimension(spark, target_path: str) -> DataFrame:
     """Current SCD-2 history of a ``scd2_dimension_stream_parquet``
     view: all closed runs plus the latest epoch's open tails."""
-    closed = spark.read.option(
-        "basePath", f"{target_path}/closed"
-    ).parquet(f"{target_path}/closed/__epoch=*").drop("__epoch")
-    parts = _list_partitions(spark, f"{target_path}/open")
-    latest = max(int(p.split("=", 1)[1]) for p in parts)
-    open_tails = (
-        spark.read.option("basePath", f"{target_path}/open")
-        .parquet(f"{target_path}/open/__epoch={latest}")
-        .drop("__epoch")
-        .withColumn("valid_to", F.lit(None).cast("long"))
+    closed = compaction.read_family(spark, target_path, "closed")
+    open_dir = compaction.latest_epoch_dir(spark, f"{target_path}/open")
+    if closed is None or open_dir is None:
+        raise FileNotFoundError(f"empty SCD-2 dimension at {target_path}")
+    open_tails = spark.read.parquet(open_dir).withColumn(
+        "valid_to", F.lit(None).cast("long")
     )
     cols = open_tails.columns
     return closed.select(*cols).unionByName(open_tails)
@@ -1719,35 +1516,21 @@ def kmv_view_stream_parquet(
         portable_hash32,
     )
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.select(
-                portable_hash32(F.col(key_col)).alias("h")
-            )
-            .distinct()
-            .orderBy("h")
-            .limit(k)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{target_path}/__epoch={epoch_id}")
-        )
-        if compact_every_n_epochs:
-            from local_stream_stack_spark.streaming import compaction
-
-            spark = batch_df.sparkSession
-            compaction.auto_compact_if_due(
-                spark,
-                target_path,
-                compact_every_n_epochs,
-                lambda: compact_kmv_view(spark, target_path, k=k),
-            )
-
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_location)
-        .start()
+    return _epoch_delta_view(
+        df,
+        target_path,
+        checkpoint_location,
+        lambda b: _kmv_fold(
+            b.select(portable_hash32(F.col(key_col)).alias("h")), k
+        ),
+        lambda spark, path: compact_kmv_view(spark, path, k=k),
+        compact_every_n_epochs,
+        "append",
     )
+
+
+def _kmv_fold(df: DataFrame, k: int) -> DataFrame:
+    return df.select("h").distinct().orderBy("h").limit(k)
 
 
 def read_kmv_view(spark, target_path: str, k: int = 64) -> DataFrame:
@@ -1758,15 +1541,13 @@ def read_kmv_view(spark, target_path: str, k: int = 64) -> DataFrame:
     from local_stream_stack_spark.operators.sketches import (
         kmv_estimate_cols,
     )
-    from local_stream_stack_spark.streaming import compaction
 
-    deltas = compaction.read_family(spark, target_path, "")
-    if deltas is None:
-        raise FileNotFoundError(f"empty KMV view at {target_path}")
-    merged = (
-        deltas.select("h").distinct().orderBy("h").limit(k)
+    return _read_folded(
+        spark,
+        target_path,
+        lambda d: _kmv_fold(d, k).agg(*kmv_estimate_cols(k)),
+        "KMV",
     )
-    return merged.agg(*kmv_estimate_cols(k))
 
 
 def compact_kmv_view(spark, target_path: str, k: int = 64) -> int:
@@ -1775,19 +1556,8 @@ def compact_kmv_view(spark, target_path: str, k: int = 64) -> int:
     KMV merge keeps only the global k minima, and a hash outside them
     can never re-enter any future merge, so the folded store reads
     identically to the unfolded one at every later epoch."""
-    from local_stream_stack_spark.streaming import compaction
-
     return compaction.compact_store(
-        spark,
-        target_path,
-        {
-            "": {
-                "fold": lambda df: df.select("h")
-                .distinct()
-                .orderBy("h")
-                .limit(k)
-            }
-        },
+        spark, target_path, {"": {"fold": lambda df: _kmv_fold(df, k)}}
     )
 
 
@@ -1844,8 +1614,6 @@ def maintain_join_view_stream_parquet(
         d_right = batch_df.filter(
             F.col(side_col) == F.lit(right_tag)
         ).select(*rcols)
-        from local_stream_stack_spark.streaming import compaction
-
         # one manifest resolution for both side families (ADVICE r11)
         snap = compaction.latest_generation(spark, store_path)
 
@@ -1869,42 +1637,28 @@ def maintain_join_view_stream_parquet(
         view_delta = parts[0]
         for p in parts[1:]:
             view_delta = view_delta.unionByName(p)
-        view_delta.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/view/__epoch={epoch_id}"
-        )
-        d_left.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/left/__epoch={epoch_id}"
-        )
-        d_right.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/right/__epoch={epoch_id}"
-        )
-        if compact_every_n_epochs:
-            compaction.auto_compact_if_due(
+        _write_epoch(view_delta, f"{store_path}/view", epoch_id)
+        _write_epoch(d_left, f"{store_path}/left", epoch_id)
+        _write_epoch(d_right, f"{store_path}/right", epoch_id)
+        compaction.auto_compact_if_due(
+            spark,
+            store_path,
+            compact_every_n_epochs,
+            lambda: compact_join_view(
                 spark,
                 store_path,
-                compact_every_n_epochs,
-                lambda: compact_join_view(
-                    spark,
-                    store_path,
-                    key=list(on)[0],
-                    n_buckets=compact_n_buckets,
-                ),
-                probe_family="view",
-            )
+                key=list(on)[0],
+                n_buckets=compact_n_buckets,
+            ),
+            probe_family="view",
+        )
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_location)
-        .start()
-    )
+    return _foreach_batch(df, fold, checkpoint_location)
 
 
 def read_join_view(spark, store_path: str) -> DataFrame:
     """Current contents of a ``maintain_join_view_stream_parquet``
     view (generation + live epoch deltas, manifest-resolved)."""
-    from local_stream_stack_spark.streaming import compaction
-
     df = compaction.read_family(spark, store_path, "view")
     if df is None:
         raise FileNotFoundError(f"empty join view at {store_path}")
@@ -1917,8 +1671,6 @@ def compact_join_view(
     """Fold a join-view store's epoch dirs into one generation: all
     three families are append-only unions; the sides bucket on the
     join key so future delta probes co-locate."""
-    from local_stream_stack_spark.streaming import compaction
-
     return compaction.compact_store(
         spark,
         store_path,
@@ -1978,51 +1730,43 @@ def maintain_bm25_index_stream_parquet(
             # once instead of re-tokenizing the batch per consumer
             .localCheckpoint(eager=True)
         )
-        postings.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/postings/__epoch={epoch_id}"
-        )
+        _write_epoch(postings, f"{store_path}/postings", epoch_id)
         doclen = (
             postings.groupBy(id_col)
             .agg(F.sum("tf").cast("bigint").alias("len"))
             .localCheckpoint(eager=True)
         )
-        doclen.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/doclen/__epoch={epoch_id}"
+        _write_epoch(doclen, f"{store_path}/doclen", epoch_id)
+        _write_epoch(
+            postings.groupBy("tok").agg(
+                F.count("*").cast("bigint").alias("df_delta")
+            ),
+            f"{store_path}/termdf",
+            epoch_id,
         )
-        postings.groupBy("tok").agg(
-            F.count("*").cast("bigint").alias("df_delta")
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/termdf/__epoch={epoch_id}"
+        _write_epoch(
+            doclen.agg(
+                F.count("*").cast("bigint").alias("n_docs_delta"),
+                F.sum("len").cast("bigint").alias("len_sum_delta"),
+            ).na.fill(0),
+            f"{store_path}/corpus",
+            epoch_id,
         )
-        doclen.agg(
-            F.count("*").cast("bigint").alias("n_docs_delta"),
-            F.sum("len").cast("bigint").alias("len_sum_delta"),
-        ).na.fill(0).coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/corpus/__epoch={epoch_id}"
-        )
-        if compact_every_n_epochs:
-            from local_stream_stack_spark.streaming import compaction
-
-            spark = batch_df.sparkSession
-            compaction.auto_compact_if_due(
+        spark = batch_df.sparkSession
+        compaction.auto_compact_if_due(
+            spark,
+            store_path,
+            compact_every_n_epochs,
+            lambda: compaction.compact_bm25_index(
                 spark,
                 store_path,
-                compact_every_n_epochs,
-                lambda: compaction.compact_bm25_index(
-                    spark,
-                    store_path,
-                    id_col=id_col,
-                    n_buckets=compact_n_buckets,
-                ),
-                probe_family="postings",
-            )
+                id_col=id_col,
+                n_buckets=compact_n_buckets,
+            ),
+            probe_family="postings",
+        )
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_location)
-        .start()
-    )
+    return _foreach_batch(df, fold, checkpoint_location)
 
 
 def read_bm25_index_topk(
@@ -2053,8 +1797,6 @@ def read_bm25_index_topk(
     families (ADVICE r11), and compaction's one-cycle deferred vacuum
     keeps the snapshot's directories alive for the read."""
     import zlib
-
-    from local_stream_stack_spark.streaming import compaction
 
     snap = compaction.latest_generation(spark, store_path)
 
@@ -2199,37 +1941,26 @@ def skyline_stream_parquet(
             )
         )
         merged = batch_min
-        if _store_has_epochs(spark, store_path):
-            prior_all = spark.read.option("basePath", store_path).parquet(
-                f"{store_path}/__epoch=*"
-            ).filter(F.col("__epoch") < F.lit(int(epoch_id)))
-            latest = prior_all.agg(F.max("__epoch").alias("e")).collect()[0].e
-            if latest is not None:
-                prior = prior_all.filter(F.col("__epoch") == latest).drop(
-                    "__epoch"
-                )
-                merged = (
-                    prior.unionByName(batch_min)
-                    .groupBy(group_col, value_col)
-                    .agg(F.sum("n").cast("bigint").alias("n"))
-                    .groupBy(group_col)
-                    .agg(F.min(F.struct(value_col, "n")).alias("m"))
-                    .select(
-                        group_col,
-                        F.col(f"m.{value_col}").alias(value_col),
-                        F.col("m.n").alias("n"),
-                    )
-                )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/__epoch={epoch_id}"
+        prior_dir = compaction.latest_epoch_dir(
+            spark, store_path, before=int(epoch_id)
         )
+        if prior_dir is not None:
+            merged = (
+                spark.read.parquet(prior_dir)
+                .unionByName(batch_min)
+                .groupBy(group_col, value_col)
+                .agg(F.sum("n").cast("bigint").alias("n"))
+                .groupBy(group_col)
+                .agg(F.min(F.struct(value_col, "n")).alias("m"))
+                .select(
+                    group_col,
+                    F.col(f"m.{value_col}").alias(value_col),
+                    F.col("m.n").alias("n"),
+                )
+            )
+        _write_epoch(merged, store_path, epoch_id)
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_location)
-        .start()
-    )
+    return _foreach_batch(df, merge, checkpoint_location)
 
 
 def read_skyline_store(
@@ -2238,11 +1969,10 @@ def read_skyline_store(
     """Current frontier of a ``skyline_stream_parquet`` store: the
     latest epoch's per-group minima with the cross-group dominance
     filter applied (a broadcast anti theta-join over the tiny state)."""
-    state = spark.read.option("basePath", store_path).parquet(
-        f"{store_path}/__epoch=*"
-    )
-    latest = state.agg(F.max("__epoch").alias("e")).collect()[0].e
-    cand = state.filter(F.col("__epoch") == latest).drop("__epoch")
+    latest = compaction.latest_epoch_dir(spark, store_path)
+    if latest is None:
+        raise FileNotFoundError(f"empty skyline store at {store_path}")
+    cand = spark.read.parquet(latest)
     dom = cand.select(
         F.col(group_col).alias("__dg"), F.col(value_col).alias("__dv")
     )
@@ -2298,37 +2028,26 @@ def maintain_ivf_index_stream_parquet(
                 ).cast("bigint"),
             ).alias("x"),
         ).localCheckpoint(eager=True)
-        q.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/vecs/__epoch={epoch_id}"
-        )
-        (
+        _write_epoch(q, f"{store_path}/vecs", epoch_id)
+        _write_epoch(
             q.select("cell", F.posexplode("x").alias("pos", "xv"))
             .groupBy("cell", "pos")
-            .agg(F.sum("xv").cast("bigint").alias("s_delta"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{store_path}/csum/__epoch={epoch_id}")
+            .agg(F.sum("xv").cast("bigint").alias("s_delta")),
+            f"{store_path}/csum",
+            epoch_id,
         )
-        if compact_every_n_epochs:
-            from local_stream_stack_spark.streaming import compaction
+        spark = batch_df.sparkSession
+        compaction.auto_compact_if_due(
+            spark,
+            store_path,
+            compact_every_n_epochs,
+            lambda: compact_ivf_index(
+                spark, store_path, n_buckets=compact_n_buckets
+            ),
+            probe_family="vecs",
+        )
 
-            spark = batch_df.sparkSession
-            compaction.auto_compact_if_due(
-                spark,
-                store_path,
-                compact_every_n_epochs,
-                lambda: compact_ivf_index(
-                    spark, store_path, n_buckets=compact_n_buckets
-                ),
-                probe_family="vecs",
-            )
-
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_location)
-        .start()
-    )
+    return _foreach_batch(df, fold, checkpoint_location)
 
 
 def compact_ivf_index(
@@ -2337,8 +2056,6 @@ def compact_ivf_index(
     """Fold a maintained IVF index into one generation: inverted
     lists bucket by cell (probe-time partition pruning), centroid
     sums re-merge by exact integer group-sum."""
-    from local_stream_stack_spark.streaming import compaction
-
     return compaction.compact_store(
         spark,
         store_path,
@@ -2368,8 +2085,6 @@ def read_ivf_index_topk(
     recipe as the batch `sim_ivf_topk`, so the maintained result is
     bit-equal to batch over the union of all epochs."""
     from pyspark.sql.window import Window
-
-    from local_stream_stack_spark.streaming import compaction
 
     def doti(a, b):
         return F.aggregate(
